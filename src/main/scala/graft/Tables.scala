@@ -30,7 +30,7 @@ object Tables {
       // only affects TIMESTAMP(NANOS) columns, which exist nowhere
       // else in the test tables, so leaving it on is inert.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = spark.read.parquet(path)
+      val df = ParquetRead(spark, path)
       df.schema("ts").dataType match {
         case LongType =>
           df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -46,6 +46,6 @@ object Tables {
             s"events.ts arrived as unsupported type $other — teach " +
               "Tables.load (and TablesSpec) the new encoding")
       }
-    } else spark.read.parquet(path)
+    } else ParquetRead(spark, path)
   }
 }

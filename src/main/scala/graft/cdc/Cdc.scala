@@ -43,12 +43,13 @@ object Cdc {
       df.filter(col(opCol) === deleteVal))
 
   /** Primary-key validity: no nulls, no duplicates (reference
-    * MergeDataFrame.is_valid_primary_key) — one aggregate pass.
+    * MergeDataFrame.is_valid_primary_key) — one aggregate pass. An
+    * empty frame is valid.
     */
   def isValidPrimaryKey(df: DataFrame, keys: Seq[String]): Boolean = {
     val anyNull = keys.map(col(_).isNull).reduce(_ || _)
     val row = df.agg(
-      sum(when(anyNull, 1L).otherwise(0L)).as("nulls"),
+      count(when(anyNull, lit(1))).as("nulls"),
       count(lit(1)).as("n"),
       count_distinct(struct(keys.map(col): _*)).as("nd")).collect()(0)
     row.getLong(0) == 0 && row.getLong(1) == row.getLong(2)
@@ -67,6 +68,25 @@ object Cdc {
       throw new IllegalArgumentException(
         s"null merge keys present (${keys.mkString(",")})")
   }
+
+  /** Order guard over a target joined to `_new_`-renamed source
+    * columns: a matched source row only wins if it is at least as new
+    * as the target row (src ord >= tgt ord). Makes merges idempotent
+    * AND arrival-order independent: replaying an old extract (or a
+    * late/out-of-order streaming micro-batch) can never regress the
+    * table — the foundation of the foreachBatch streaming path's
+    * batch-equivalence.
+    */
+  private def srcNewEnough(orderGuard: Option[String], dataCols: Seq[String]): Column =
+    orderGuard match {
+      // only data columns are renamed to _new_: a guard on a key
+      // column is vacuous (matched rows are equal on every key by
+      // construction), and on an SCD2 state column it has no source
+      // side to compare
+      case Some(ord) if dataCols.contains(ord) =>
+        col(ord).isNull || col(s"_new_$ord") >= col(ord)
+      case _ => lit(true)
+    }
 
   /** SCD type-1 merge as a pure plan, with per-row `_action` tags
     * (`insert` / `update` / `unchanged` / `delete` / `keep`) so the
@@ -94,23 +114,9 @@ object Cdc {
       .join(snap, keys, "full_outer")
     val changed = compareCols.map(c => !(col(c) <=> col(s"_new_$c")))
       .reduceOption(_ || _).getOrElse(lit(false))
-    // Order guard: a matched source row only wins if it is at least as
-    // new as the target row (src ord >= tgt ord). Makes merges
-    // idempotent AND arrival-order independent: replaying an old
-    // extract (or a late/out-of-order streaming micro-batch) can never
-    // regress the table — the foundation of the foreachBatch streaming
-    // path's batch-equivalence.
-    val srcNewEnough = orderGuard match {
-      // a guard on a key column is vacuous (matched rows are equal on
-      // every key by construction) — and keys are never renamed to
-      // _new_, so referencing one would crash the plan
-      case Some(ord) if !keys.contains(ord) =>
-        col(ord).isNull || col(s"_new_$ord") >= col(ord)
-      case _ => lit(true)
-    }
     val action = when(col("_tgt_present").isNull, "insert")
       .when(col("_src_present").isNull, if (deleteMissing) "delete" else "keep")
-      .when(changed && srcNewEnough, "update")
+      .when(changed && srcNewEnough(orderGuard, dataCols), "update")
       .when(changed, "stale")
       .otherwise("unchanged")
     val takeNew = col("_action").isin("insert", "update")
@@ -192,10 +198,13 @@ object Cdc {
     * Target must carry is_current/start_time/end_time/delete_time.
     * `compareExclude` columns are carried but not compared (see
     * scd1MergeTagged — prevents unbounded spurious history from
-    * ingest-control timestamps).
+    * ingest-control timestamps). `orderGuard` names the source's
+    * order column: a matched row older than the current version is
+    * tagged `stale` and changes nothing (the scd1MergeTagged guard).
     */
   def scd2MergeTagged(target: DataFrame, updates: DataFrame, keys: Seq[String],
-                      orderBy: Seq[Column], deleteMissing: Boolean = false,
+                      orderBy: Seq[Column], orderGuard: String,
+                      deleteMissing: Boolean = false,
                       compareExclude: Seq[String] = Nil): DataFrame = {
     val now = current_timestamp()
     val dataCols = target.columns
@@ -213,22 +222,26 @@ object Cdc {
     val joined = current.join(snap.withColumn("_matched", lit(1)), keys, "full_outer")
     val changed = compareCols.map(c => !(col(c) <=> col(s"_new_$c")))
       .reduceOption(_ || _).getOrElse(lit(false))
+    // order guard, as in scd1MergeTagged: a matched source row older
+    // than the current version is stale — it neither closes the
+    // current row nor becomes a version of its own
+    val advance = changed && srcNewEnough(Some(orderGuard), dataCols)
 
-    // matched + changed → closed old row
+    // matched + changed (and new enough) → closed old row
     val closedChanged = joined
-      .filter(col("_matched") === 1 && col("is_current") === 1 && changed)
+      .filter(col("_matched") === 1 && col("is_current") === 1 && advance)
       .select(current.columns.map(col).toIndexedSeq: _*)
       .withColumn("is_current", lit(0))
       .withColumn("end_time", now)
       .withColumn("_action", lit("close"))
-    // matched + unchanged → untouched current row
+    // matched + unchanged (or stale) → untouched current row
     val unchanged = joined
-      .filter(col("_matched") === 1 && col("is_current") === 1 && !changed)
-      .select(current.columns.map(col).toIndexedSeq: _*)
-      .withColumn("_action", lit("unchanged"))
+      .filter(col("_matched") === 1 && col("is_current") === 1 && !advance)
+      .select(current.columns.map(col).toIndexedSeq :+
+        when(changed, "stale").otherwise("unchanged").as("_action"): _*)
     // new or changed key → fresh current version
     val inserted = joined
-      .filter(col("_matched") === 1 && (col("is_current").isNull || changed))
+      .filter(col("_matched") === 1 && (col("is_current").isNull || advance))
       .select(keys.map(col) ++ dataCols.map(c => col(s"_new_$c").as(c)): _*)
       .withColumn("is_current", lit(1))
       .withColumn("start_time", now)
@@ -253,11 +266,4 @@ object Cdc {
       .unionByName(inserted)
       .unionByName(missingOut)
   }
-
-  /** SCD type-2 merge (untagged final table). */
-  def scd2Merge(target: DataFrame, updates: DataFrame, keys: Seq[String],
-                orderBy: Seq[Column], deleteMissing: Boolean = false,
-                compareExclude: Seq[String] = Nil): DataFrame =
-    scd2MergeTagged(target, updates, keys, orderBy, deleteMissing, compareExclude)
-      .drop("_action")
 }

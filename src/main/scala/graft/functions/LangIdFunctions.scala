@@ -35,8 +35,6 @@ final class CtModel private (
     private val packed: java.util.HashMap[UTF8String, Array[Long]],
     private val k: Int) extends Serializable {
 
-  def numLangs: Int = langs.length
-
   /** Score a (gram, drank) profile array: returns (bestLang,
     * bestDist) with the contract above, or ("und", null) for an
     * empty profile (0-gram documents classify as 'und' with NULL

@@ -197,10 +197,6 @@ object ConfigHandler {
     }
   }
 
-  def loadIncrementalDedup(path: String): IncrementalDedupConfig =
-    parseIncrementalDedup(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8))
-
   private def need(n: JsonNode, field: String, at: String): JsonNode = {
     val v = n.get(field)
     if (v == null || v.isNull) throw new ConfigError(at, s"missing required field '$field'")

@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -314,7 +314,10 @@ object DeltaLogTableFormat extends TableFormat {
         // pointer (the JSON log is never truncated, so nothing is lost)
         val fromCheckpoint = scala.util.Try {
           val st = emptyState
-          spark.read.parquet(checkpointFile(path, cp).toString)
+          // the checkpoint's schema is CpRow's by construction: read
+          // with it rather than start an inference job per state load
+          spark.read.schema(Encoders.product[CpRow].schema)
+            .parquet(checkpointFile(path, cp).toString)
             .orderBy("ord").collect().foreach { r =>
               val addIdx = r.fieldIndex("add")
               if (!r.isNullAt(addIdx)) {
@@ -1120,7 +1123,7 @@ object DeltaLogTableFormat extends TableFormat {
         case Some(h) =>
           val target = MergeTable.evolveTarget(
             readVersion(spark, path, h), updates, schemaEvolution)
-          val tagged = Cdc.scd2MergeTagged(target, updates, keys, ord,
+          val tagged = Cdc.scd2MergeTagged(target, updates, keys, ord, orderBy,
             deleteMissing, compareExclude)
           MergeTable.observedWrite(tagged, dropActions = Nil)(
             out => { commitRewrite(path, out, basedOn = head); () })
@@ -1278,7 +1281,7 @@ object DeltaLogTableFormat extends TableFormat {
     val affectedTarget = target.filter(affectedCond)
     val tagged =
       if (scdType == 2)
-        Cdc.scd2MergeTagged(affectedTarget, updates, keys, ord,
+        Cdc.scd2MergeTagged(affectedTarget, updates, keys, ord, orderBy,
           deleteMissing = false, compareExclude)
       else
         Cdc.scd1MergeTagged(affectedTarget,

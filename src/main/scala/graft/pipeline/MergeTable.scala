@@ -20,7 +20,7 @@ final case class MergeStats(inserted: Long, updated: Long, deleted: Long)
   * snapshot directory `v=N` and atomically swaps a `_CURRENT`
   * pointer file, so readers never see partial writes and failed
   * merges leave the previous version intact. On a cluster the same
-  * Cdc.scd1Merge/scd2Merge plans back onto Delta/Iceberg
+  * Cdc.scd1MergeTagged/scd2MergeTagged plans back onto Delta/Iceberg
   * copy-on-write; this keeps the engine dependency-free.
   *
   * Scale note: a full-snapshot rewrite per merge is the worst case;
@@ -41,7 +41,7 @@ object MergeTable {
   def read(spark: SparkSession, path: String): DataFrame = {
     val v = currentVersion(path).getOrElse(
       throw new IllegalStateException(s"no current version at $path"))
-    spark.read.parquet(s"$path/v=$v")
+    graft.ParquetRead(spark, s"$path/v=$v")
   }
 
   /** Time travel: read a specific snapshot version (fails if it has
@@ -51,7 +51,7 @@ object MergeTable {
     val dir = java.nio.file.Paths.get(path, s"v=$version")
     if (!Files.exists(dir)) throw new IllegalStateException(
       s"version $version does not exist at $path (vacuumed?)")
-    spark.read.parquet(dir.toString)
+    graft.ParquetRead(spark, dir.toString)
   }
 
   /** List snapshot versions present on disk (ascending). */
@@ -294,7 +294,7 @@ object MergeTable {
     val affectedTarget = target.filter(col(partitionCol).isin(affected: _*))
     val tagged =
       if (scdType == 2)
-        Cdc.scd2MergeTagged(affectedTarget, updates, keys, ord,
+        Cdc.scd2MergeTagged(affectedTarget, updates, keys, ord, orderBy,
           deleteMissing = false, compareExclude)
       else
         Cdc.scd1MergeTagged(affectedTarget,
@@ -480,7 +480,7 @@ object MergeTable {
       MergeStats(inserted = obs.get("n").asInstanceOf[Long], updated = 0, deleted = 0)
     } else {
       val target = evolveTarget(read(spark, path), updates, schemaEvolution)
-      val tagged = Cdc.scd2MergeTagged(target, updates, keys, ord,
+      val tagged = Cdc.scd2MergeTagged(target, updates, keys, ord, orderBy,
         deleteMissing, compareExclude)
       writeTagged(tagged, path, dropActions = Nil)
     }

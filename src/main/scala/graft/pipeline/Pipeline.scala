@@ -14,7 +14,6 @@ import graft.sources.Sources
   */
 final case class Pipeline(transforms: Seq[Transform]) {
   def apply(df: DataFrame): DataFrame = transforms.foldLeft(df)((d, t) => t(d))
-  def andThen(more: Transform*): Pipeline = Pipeline(transforms ++ more)
 }
 
 object Pipeline {

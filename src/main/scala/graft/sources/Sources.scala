@@ -33,7 +33,7 @@ object Sources {
 
   def readParquet(spark: SparkSession, path: String,
                   options: Map[String, String] = Map.empty): DataFrame =
-    stamp(spark.read.options(options).parquet(path))
+    stamp(graft.ParquetRead(spark, path, options))
 
   def readCsv(spark: SparkSession, path: String,
               options: Map[String, String] = Map.empty): DataFrame =

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 
 import graft.operators.{Dedup, Similarity, TextAnalysis}
 import graft.pipeline.ConfigHandler.IncrementalDedupConfig
@@ -107,8 +107,9 @@ object IncrementalDedupJob {
     def dbl(k: String, d: Double): Double =
       p.get(k).map(_.toDouble).getOrElse(d)
 
-    def fold(chg: DataFrame, dels: Option[DataFrame], v: Int,
+    def fold(feed: DataFrame, feedDels: Option[DataFrame], v: Int,
              resync: Boolean): Unit = {
+      val (chg, dels) = liveChanges(feed, feedDels, cfg.idCol)
       val batch = chg.select(col(cfg.idCol), col(cfg.contentCol))
       val ord = v.toLong
       cfg.member match {
@@ -302,6 +303,26 @@ object IncrementalDedupJob {
       }
     }
   }
+
+  /** An SCD2 silver (one carrying `is_current` and `delete_time`)
+    * keeps every closed version: its change feed holds each closed
+    * row next to its successor under the same id, and a soft delete
+    * is a close with `delete_time` set and no successor. Fold only
+    * the rows that are not closed, and send ids whose only change is
+    * a soft delete to the delete feed. Other silvers pass through.
+    */
+  private def liveChanges(chg: DataFrame, dels: Option[DataFrame],
+                          idCol: String): (DataFrame, Option[DataFrame]) =
+    if (!Seq("is_current", "delete_time").forall(chg.columns.contains))
+      (chg, dels)
+    else {
+      val live = chg.filter(!(col("is_current") <=> lit(0)))
+      val softDeleted = chg
+        .filter(col("is_current") === 0 && col("delete_time").isNotNull)
+        .select(col(idCol))
+        .join(live.select(col(idCol)), Seq(idCol), "left_anti")
+      (live, dels.map(_.unionByName(softDeleted)))
+    }
 
   private def runFolds(spark: SparkSession, cfg: IncrementalDedupConfig,
                        fold: (DataFrame, Option[DataFrame], Int, Boolean)

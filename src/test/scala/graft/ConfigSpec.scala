@@ -967,4 +967,56 @@ class ConfigSpec extends SparkSpec {
         Files.createTempDirectory("graft_cfgmm_ckC").toString)
     }
   }
+
+  test("incremental minhash over an SCD2 silver folds current rows; soft deletes leave gold") {
+    // an SCD2 silver keeps every closed version, and its change feed
+    // carries each closed row next to its successor under the same
+    // id: the fold must take only current rows (gold equals the batch
+    // operator over silver's current rows), and a soft delete — a
+    // close with delete_time set and no successor — must reach the
+    // member's delete feed
+    import SparkSpec.spark.implicits._
+    val silver = Files.createTempDirectory("graft_cfg_scd2_silver").toString
+    val work = Files.createTempDirectory("graft_cfg_scd2").toString
+    val sfmt = graft.pipeline.DeltaLogTableFormat
+    val cfg = ConfigHandler.IncrementalDedupConfig(member = "minhash",
+      silverPath = silver, checkpoint = s"$work/ck",
+      stateDir = s"$work/state", goldPath = s"$work/gold",
+      idCol = "doc_id", contentCol = "text", silverFormat = sfmt,
+      stateFormat = sfmt, params = Map("n" -> "3", "numPerm" -> "16",
+        "bands" -> "4", "threshold" -> "0.5", "maxBucket" -> "10"))
+    val dupText = "alpha beta gamma delta epsilon zeta eta theta"
+    val other = "one two three four five six seven eight"
+    def checkGold(label: String): Unit = {
+      val current = sfmt.read(spark, silver).filter(col("is_current") === 1)
+        .select("doc_id", "text")
+      val truth = graft.operators.Dedup.minhashLshStats(current, "doc_id",
+        "text", n = 3, numPerm = 16, bands = 4, threshold = 0.5, maxBucket = 10)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        .toSeq.sortBy(_._1)
+      val got = sfmt.read(spark, cfg.goldPath)
+        .select(col("id"), col("n_candidates"), col("n_near"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        .toSeq.sortBy(_._1)
+      assert(got == truth, s"$label: $got vs $truth")
+    }
+    sfmt.scd2Merge(spark, silver, Seq((1L, dupText, 0), (2L, dupText, 0),
+        (3L, other, 0), (4L, "red green blue cyan magenta yellow", 0))
+      .toDF("doc_id", "text", "ord"), Seq("doc_id"), "ord")
+    assert(IncrementalDedupJob.run(spark, cfg).nonEmpty)
+    checkGold("after batch 1")
+    // updates: doc 3 joins the duplicate family, doc 1 leaves it; the
+    // closed versions of both stay in silver as history
+    sfmt.scd2Merge(spark, silver, Seq((1L, other + " nine", 1),
+        (3L, dupText, 1)).toDF("doc_id", "text", "ord"), Seq("doc_id"), "ord")
+    assert(IncrementalDedupJob.run(spark, cfg).nonEmpty)
+    checkGold("after batch 2")
+    // a full-snapshot merge without doc 2 soft-deletes it
+    sfmt.scd2Merge(spark, silver, Seq((1L, other + " nine", 1),
+        (3L, dupText, 1), (4L, "red green blue cyan magenta yellow", 0))
+      .toDF("doc_id", "text", "ord"), Seq("doc_id"), "ord", deleteMissing = true)
+    assert(IncrementalDedupJob.run(spark, cfg).nonEmpty)
+    checkGold("after soft delete")
+    assert(sfmt.read(spark, cfg.goldPath).filter(col("id") === 2L).count() == 0)
+  }
 }

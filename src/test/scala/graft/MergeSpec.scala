@@ -1519,4 +1519,48 @@ class MergeSpec extends SparkSpec {
       .orderBy("id").collect().map(r => (r.getLong(0), r.getString(1)))
     assert(out.sameElements(Array((1L, "a2"), (3L, "c2"))))
   }
+
+  test("scd2 order guard: an older source row neither closes nor replaces the current version") {
+    // the SCD1 merge's order guard, on the SCD2 path of both formats:
+    // a late row (ord 5 after ord 10) must leave 'a' current and add
+    // no history row
+    for (fmt <- Seq[TableFormat](SnapshotTableFormat,
+        graft.pipeline.DeltaLogTableFormat)) {
+      val p = tmp()
+      fmt.scd2Merge(spark, p, Seq((1L, "a", 10)).toDF("k", "v", "ord"),
+        Seq("k"), "ord")
+      val s = fmt.scd2Merge(spark, p, Seq((1L, "b", 5)).toDF("k", "v", "ord"),
+        Seq("k"), "ord")
+      val rows = fmt.read(spark, p)
+        .select("k", "v", "ord", "is_current").orderBy("v").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getInt(3))).toSeq
+      assert(rows == Seq((1L, "a", 10, 1)), s"$fmt: $rows")
+      assert(s.inserted == 0 && s.updated == 0, s"$fmt: stale row counted: $s")
+      // a newer row still versions the key
+      fmt.scd2Merge(spark, p, Seq((1L, "c", 11)).toDF("k", "v", "ord"),
+        Seq("k"), "ord")
+      val after = fmt.read(spark, p).select("v", "is_current").orderBy("v")
+        .collect().map(r => (r.getString(0), r.getInt(1))).toSeq
+      assert(after == Seq(("a", 0), ("c", 1)), s"$fmt: $after")
+    }
+  }
+
+  test("cdc splitOps partitions a feed by operation") {
+    val feed = Seq((1L, "insert"), (2L, "update"), (3L, "delete"),
+      (4L, "insert"), (5L, "upsert")).toDF("id", "op")
+    val (ins, upd, del) = Cdc.splitOps(feed, "op")
+    def ids(df: DataFrame) = df.select("id").as[Long].collect().sorted.toSeq
+    assert(ids(ins) == Seq(1L, 4L) && ids(upd) == Seq(2L) && ids(del) == Seq(3L))
+    val (i2, u2, d2) = Cdc.splitOps(feed, "op", insertVal = "upsert")
+    assert(ids(i2) == Seq(5L) && ids(u2) == Seq(2L) && ids(d2) == Seq(3L))
+  }
+
+  test("cdc isValidPrimaryKey: no null and no duplicate keys") {
+    val ok = Seq((1L, "a"), (2L, "a"), (1L, "b")).toDF("id", "part")
+    assert(Cdc.isValidPrimaryKey(ok, Seq("id", "part")))
+    assert(!Cdc.isValidPrimaryKey(ok, Seq("id")), "duplicate id 1")
+    val withNull = Seq((Some(1L), "a"), (None, "b")).toDF("id", "part")
+    assert(!Cdc.isValidPrimaryKey(withNull, Seq("id", "part")), "null key")
+    assert(Cdc.isValidPrimaryKey(ok.limit(0), Seq("id")), "empty frame is valid")
+  }
 }
