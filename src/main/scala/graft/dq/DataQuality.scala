@@ -50,6 +50,18 @@ final case class MatchesRegex(column: String, pattern: String) extends DqRule {
     sum(when(col(column).isNull || !col(column).rlike(pattern), 1L).otherwise(0L))
 }
 
+/** Merge-key completeness: rows with a null in ANY of `keys`. The
+  * ingest job adds one per distinct key set of its merge targets to
+  * the DQ pass it already runs, so the check costs no scan of its
+  * own; it is never written to `dq_results`.
+  */
+private[graft] final case class NullKeys(keys: Seq[String]) extends DqRule {
+  val name = s"null_keys(${keys.mkString(",")})"
+  val column = keys.mkString(",")
+  def violations: Column =
+    sum(when(keys.map(col(_).isNull).reduce(_ || _), 1L).otherwise(0L))
+}
+
 /** Custom violation predicate (reference custom_sql: a query that
   * must return zero rows; here, a predicate that must match zero rows).
   */

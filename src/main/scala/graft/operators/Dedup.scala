@@ -1190,11 +1190,15 @@ object Dedup {
     * = (id, chash) doc→content-group membership; `groups` = (chash,
     * shash) one representative hash array per distinct content; and
     * `bands` = (chash, band, bhash) LSH bucket rows per GROUP, chash
-    * = xxhash64 of the hash array. All keyed merge tables maintained
-    * delete-then-merge per batch (updates retract their old
-    * membership row; a group whose last member leaves is swept from
-    * `groups`/`bands`; replays converge — the pair-state argument of
-    * the segment-dedup sibling). The collapse is value-EXACT by the
+    * = xxhash64 of the hash array. All keyed merge tables, each
+    * committed ONCE per batch by a merge that also removes keys
+    * ([[graft.pipeline.TableFormat.scd1MergeRemoving]]): the `docs`
+    * commit retracts the batch's and the deleted ids' old membership
+    * rows and merges the new ones; the `bands` and `groups` commits
+    * merge the batch's groups and sweep those whose last member left;
+    * the gold commit merges the refreshed stats and drops deleted ids.
+    * Replays converge — the pair-state argument of the segment-dedup
+    * sibling. The collapse is value-EXACT by the
     * batch operator's argument (buckets are group-closed, the flood
     * cap applies to the SUMMED doc count, within-group pairs score
     * Jaccard 1), and it removes the duplication-factor quadratic the
@@ -1349,13 +1353,11 @@ object Dedup {
           coalesce(col("n_near"), lit(0L)).as("n_near"),
           col("max_jaccard"), lit(batchOrd).as("_ord"),
           coalesce(col("_sig_now"), lit(0L)).as("_bucket_sig"))
-      if (!statsRows.isEmpty)
-        fmt.scd1Merge(spark, goldPath, statsRows, Seq("id"), "_ord",
-          compareExclude = Nil)
-      drops.foreach { d =>
-        if (fmt.exists(goldPath) && !d.isEmpty)
-          fmt.deleteKeys(spark, goldPath, d, Seq("id"))
-      }
+      // materialized once: the emptiness probe and the gold commit
+      // read the same rows instead of each evaluating the plan
+      val stats = graft.Materialize.eager(statsRows)
+      if (!stats.isEmpty || (drops.nonEmpty && fmt.exists(goldPath)))
+        mergeRemoving(spark, fmt, goldPath, stats, drops, Seq("id"))
     }
 
     // null-text docs are excluded from state/gold (documented
@@ -1418,16 +1420,18 @@ object Dedup {
     }
     val delIds = combinedDeletes(spark, deletes, idCol, "id", fullResync,
       docsPath, batchAll.select(col("id")), fmt)
-    // ids leaving gold entirely: hard deletes + update-to-null docs
-    val drops = graft.Materialize.eager(
-      delIds.fold(batchAll.filter(col("text").isNull).select(col("id")))(
-        _.unionByName(batchAll.filter(col("text").isNull).select(col("id"))))
-        .distinct())
-    // groups this fold's retractions can LEAVE (re-keyed or deleted
-    // ids' old membership) — the orphan-sweep scope, read BEFORE any
-    // state mutation
-    val retIds = graft.Materialize.eager(
-      batchAll.select(col("id")).unionByName(drops).distinct())
+    // ids leaving gold entirely: hard deletes + update-to-null docs,
+    // probed for emptiness once (without deletes, a filter of the
+    // materialized batch)
+    val nulled = batchAll.filter(col("text").isNull).select(col("id"))
+    val drops = Some(delIds.fold(nulled)(d =>
+      graft.Materialize.eager(d.unionByName(nulled).distinct())))
+      .filterNot(_.isEmpty)
+    // every id whose old membership row this fold retracts (re-keyed,
+    // nulled or deleted), and the groups those rows LEAVE — the
+    // orphan-sweep scope, read BEFORE any state mutation
+    val retIds = drops.fold(batchAll.select(col("id")))(d =>
+      graft.Materialize.eager(batchAll.select(col("id")).unionByName(d).distinct()))
     val touchedOld: Option[DataFrame] =
       if (fmt.exists(docsPath) && !retIds.isEmpty)
         Some(graft.Materialize.eager(
@@ -1435,37 +1439,29 @@ object Dedup {
             .join(retIds, Seq("id"), "left_semi")
             .select(col("chash")).distinct()))
       else None
-    if (!batchAll.isEmpty) {
-      if (fmt.exists(docsPath))
-        fmt.deleteKeys(spark, docsPath,
-          batchAll.select(col("id")).distinct(), Seq("id"))
-      if (!batchDocs.isEmpty) {
-        val batchH = graft.Materialize.eager(
-          shingleHashes(batchDocs, "id", "text", n)
-            .withColumn("chash", xxhash64(col("shash"))))
-        mergeMinhashGroupState(spark, batchH, docsPath, groupsPath, bandsPath,
-          batchOrd, numPerm, bands, fmt)
-      }
-    }
-    // only HARD deletes need a second state pass: update-to-null ids
-    // were already removed by the batchAll retraction and nothing
-    // re-merged them (batchDocs excludes null rows)
-    delIds.foreach { d =>
-      if (fmt.exists(docsPath) && !d.isEmpty)
-        fmt.deleteKeys(spark, docsPath, d, Seq("id"))
-    }
+    // a hard-deleted id leaves even when the batch also carries it
+    val liveDocs = drops.fold(batchDocs)(d => batchDocs.join(d, Seq("id"), "left_anti"))
     // orphan sweep: a group whose LAST member left must leave the
     // groups/bands tables too — its band rows would otherwise keep
-    // counting toward bucket totals and signatures forever
-    touchedOld.foreach { t =>
-      val orphans = graft.Materialize.eager(
+    // counting toward bucket totals and signatures forever. Known only
+    // once the docs commit has landed.
+    def orphans(): Option[DataFrame] = touchedOld.map(t =>
+      graft.Materialize.eager(
         t.join(fmt.read(spark, docsPath).select(col("chash")),
-          Seq("chash"), "left_anti"))
-      if (!orphans.isEmpty) {
-        if (fmt.exists(groupsPath))
-          fmt.deleteKeys(spark, groupsPath, orphans, Seq("chash"))
-        if (fmt.exists(bandsPath))
-          fmt.deleteKeys(spark, bandsPath, orphans, Seq("chash"))
+          Seq("chash"), "left_anti"))).filterNot(_.isEmpty)
+    // each state table commits once: docs (retraction + membership),
+    // then bands and groups (new groups + orphan sweep)
+    if (!liveDocs.isEmpty) {
+      val batchH = graft.Materialize.eager(
+        shingleHashes(liveDocs, "id", "text", n)
+          .withColumn("chash", xxhash64(col("shash"))))
+      mergeMinhashGroupState(spark, batchH, docsPath, groupsPath, bandsPath,
+        batchOrd, numPerm, bands, fmt, touchedOld.map(_ => retIds), orphans)
+    } else if (touchedOld.nonEmpty) {
+      fmt.deleteKeys(spark, docsPath, retIds, Seq("id"))
+      orphans().foreach { o =>
+        fmt.deleteKeys(spark, groupsPath, o, Seq("chash"))
+        fmt.deleteKeys(spark, bandsPath, o, Seq("chash"))
       }
     }
     if (!fmt.exists(docsPath)) return // empty first batch
@@ -1506,43 +1502,66 @@ object Dedup {
           .unionByName(batchDocs.select(col("id"))).distinct()
       } else batchDocs.select(col("id")).distinct()
     val affected = graft.Materialize.eager(
-      if (drops.isEmpty) affectedAll
-      else affectedAll.join(drops, Seq("id"), "left_anti"))
+      drops.fold(affectedAll)(d => affectedAll.join(d, Seq("id"), "left_anti")))
     val affectedGroups = graft.Materialize.eager(
       members.join(affected, Seq("id"), "left_semi")
         .select(col("chash")).distinct())
     refresh(members, groupsT, bandsT, gsizes, buckets, affected,
-      affectedGroups, sigNowDoc, if (drops.isEmpty) None else Some(drops))
+      affectedGroups, sigNowDoc, drops)
   }
+
+  /** One commit: SCD1-upsert `rows` into `path` (ordered by `_ord`),
+    * removing the keys in `remove` when given.
+    */
+  private def mergeRemoving(spark: SparkSession,
+                            fmt: graft.pipeline.TableFormat, path: String,
+                            rows: DataFrame, remove: Option[DataFrame],
+                            keys: Seq[String]): Unit =
+    remove match {
+      case Some(r) =>
+        fmt.scd1MergeRemoving(spark, path, rows, r, keys, "_ord",
+          compareExclude = Nil)
+      case None =>
+        fmt.scd1Merge(spark, path, rows, keys, "_ord", compareExclude = Nil)
+    }
 
   /** Merge one batch's group-keyed MinHash state (batchH = (id,
     * shash, chash)): membership keyed on id, representative arrays
-    * keyed on chash, band rows keyed (band, bhash, chash). Group and
-    * band rows for an EXISTING chash merge idempotently (identical
-    * content by construction), so replays converge.
+    * keyed on chash, band rows keyed (band, bhash, chash), one commit
+    * per table. `retract` names ids whose old membership rows the docs
+    * commit removes; `orphans`, asked after that commit, names the
+    * groups it left memberless, which the bands and groups commits
+    * remove. Group and band rows for an EXISTING chash merge
+    * idempotently (identical content by construction), so replays
+    * converge.
     */
   private def mergeMinhashGroupState(spark: SparkSession, batchH: DataFrame,
       docsPath: String, groupsPath: String, bandsPath: String,
       batchOrd: Long, numPerm: Int, bands: Int,
-      fmt: graft.pipeline.TableFormat): Unit = {
-    fmt.scd1Merge(spark, docsPath,
-      batchH.select(col("id"), col("chash"))
-        .withColumn("_ord", lit(batchOrd)),
-      Seq("id"), "_ord", compareExclude = Nil)
+      fmt: graft.pipeline.TableFormat,
+      retract: Option[DataFrame] = None,
+      orphans: () => Option[DataFrame] = () => None): Unit = {
+    mergeRemoving(spark, fmt, docsPath,
+      batchH.select(col("id"), col("chash")).withColumn("_ord", lit(batchOrd)),
+      retract, Seq("id"))
+    val gone = orphans()
     // one representative array per batch group (`first` exact: all
     // members' arrays are identical by construction)
     val batchGroups = graft.Materialize.eager(
       batchH.groupBy(col("chash")).agg(first(col("shash")).as("shash")))
-    fmt.scd1Merge(spark, groupsPath,
-      batchGroups.withColumn("_ord", lit(batchOrd)),
-      Seq("chash"), "_ord", compareExclude = Nil)
-    fmt.scd1Merge(spark, bandsPath,
-      bandRowsFromHashes(
-          batchGroups.select(col("chash").as("id"), col("shash")),
+    def bandRows(groups: DataFrame): DataFrame =
+      bandRowsFromHashes(groups.select(col("chash").as("id"), col("shash")),
           numPerm, bands)
         .select(col("id").as("chash"), col("band"), col("bhash"))
-        .withColumn("_ord", lit(batchOrd)),
-      Seq("band", "bhash", "chash"), "_ord", compareExclude = Nil)
+    // an orphan's band rows are its array's bands, named from the
+    // groups table before the groups commit removes it
+    mergeRemoving(spark, fmt, bandsPath,
+      bandRows(batchGroups).withColumn("_ord", lit(batchOrd)),
+      gone.map(o => bandRows(
+        fmt.read(spark, groupsPath).join(o, Seq("chash"), "left_semi"))),
+      Seq("band", "bhash", "chash"))
+    mergeRemoving(spark, fmt, groupsPath,
+      batchGroups.withColumn("_ord", lit(batchOrd)), gone, Seq("chash"))
   }
 
   /** Fail fast when a state dir written by the pre-r15 DOC-level
@@ -2265,6 +2284,13 @@ object Dedup {
     * collect is ≤ 4·65536 · min(|keys|, corpus/maxBucket) rows —
     * the unkeyed operator's structural bound times the number of
     * flood-capable keys, never corpus-sized.
+    *
+    * A NULL key scopes nothing: every join on the key is null-unsafe
+    * equality, so a null-keyed row never pairs — not with another
+    * null-keyed row, not even with an identical hash — and is
+    * reported with `n_candidates = 0`, `n_near = 0` and a null
+    * `min_hamming`. No check enforces non-null keys (it would cost a
+    * job); a caller that wants such rows compared gives them a key.
     */
   private[graft] def hammingNearDupFromHashesKeyed(
       hashed: DataFrame, idCol: String, keyCol: String,

@@ -1,7 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetDriverWriter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Audit-log records for write operations (capability counterpart of
   * ingest-framework/framework/src/sparkbuilder/audit/auditlogs.py:
@@ -9,6 +11,26 @@ import org.apache.spark.sql.functions._
   * metrics payload).
   */
 object Audit {
+
+  /** Append a small frame (audit, run and DQ rows) to the parquet
+    * table at `dir` as one file written on the driver, and return its
+    * rows. The frame is collected — the records below are local
+    * relations, which collect without a Spark job — and written with
+    * Spark's own parquet writer ([[ParquetDriverWriter]]), so the
+    * directory reads back as `df.write.mode("append").parquet(dir)`
+    * would have left it.
+    */
+  def append(df: DataFrame, dir: String): Array[Row] = {
+    val rows = df.collect()
+    append(df.sparkSession, rows.toSeq, df.schema, dir)
+    rows
+  }
+
+  /** [[append]] for rows already on the driver. */
+  def append(spark: SparkSession, rows: Seq[Row], schema: StructType,
+             dir: String): Unit =
+    ParquetDriverWriter.write(spark, rows, schema, dir)
+
   def log(spark: SparkSession, tableName: String, operation: String,
           stats: MergeStats, jobId: String = ""): DataFrame = {
     import spark.implicits._

@@ -262,6 +262,21 @@ final case class BucketedTableFormat(buckets: Int = 64) extends TableFormat {
       onePerTuple = true, preAttempt = () => revalidate(path, keys))
   }
 
+  /** One pruned commit over the union of the buckets the upserts and
+    * the removals hash to; each of those buckets rewrites as one file.
+    */
+  override def scd1MergeRemoving(spark: SparkSession, path: String,
+                                 updates: DataFrame, removeKeys: DataFrame,
+                                 keys: Seq[String], orderBy: String,
+                                 compareExclude: Seq[String] = Sources.controlColumns,
+                                 schemaEvolution: Boolean = true): MergeStats = {
+    validateOrStamp(spark, path, keys)
+    inner.mergePruned(spark, path, withBucket(updates, keys), keys,
+      orderBy, Seq(BucketCol), scdType = 1, compareExclude,
+      onePerTuple = true, preAttempt = () => revalidate(path, keys),
+      removeKeys = Some(withBucket(removeKeys.select(keys.map(col): _*), keys)))
+  }
+
   override def scd2Merge(spark: SparkSession, path: String, updates: DataFrame,
                          keys: Seq[String], orderBy: String,
                          deleteMissing: Boolean = false,

@@ -936,6 +936,23 @@ object DeltaLogTableFormat extends TableFormat {
                          deleteMissing: Boolean = false,
                          compareExclude: Seq[String] = Sources.controlColumns,
                          schemaEvolution: Boolean = true): MergeStats =
+    scd1MergeInto(spark, path, updates, keys, orderBy, deleteMissing,
+      compareExclude, schemaEvolution, removeKeys = None)
+
+  override def scd1MergeRemoving(spark: SparkSession, path: String,
+                                 updates: DataFrame, removeKeys: DataFrame,
+                                 keys: Seq[String], orderBy: String,
+                                 compareExclude: Seq[String] = Sources.controlColumns,
+                                 schemaEvolution: Boolean = true): MergeStats =
+    scd1MergeInto(spark, path, updates, keys, orderBy, deleteMissing = false,
+      compareExclude, schemaEvolution, Some(removeKeys))
+
+  private def scd1MergeInto(spark: SparkSession, path: String,
+                            updates: DataFrame, keys: Seq[String],
+                            orderBy: String, deleteMissing: Boolean,
+                            compareExclude: Seq[String],
+                            schemaEvolution: Boolean,
+                            removeKeys: Option[DataFrame]): MergeStats =
     withCommitRetry(s"scd1Merge($path)") {
       val ord = MergeTable.deterministicOrd(updates, keys, orderBy)
       val head = currentVersion(path) // pinned: plan and commit agree
@@ -949,7 +966,8 @@ object DeltaLogTableFormat extends TableFormat {
             deleted = 0)
         case Some(h) =>
           val target = MergeTable.evolveTarget(
-            readVersion(spark, path, h), updates, schemaEvolution)
+            MergeTable.withoutKeys(readVersion(spark, path, h), removeKeys, keys),
+            updates, schemaEvolution)
           val tagged = Cdc.scd1MergeTagged(target,
             updates.select(target.columns.map(col).toIndexedSeq: _*),
             keys, ord, deleteMissing, compareExclude, orderGuard = Some(orderBy))
@@ -1192,6 +1210,13 @@ object DeltaLogTableFormat extends TableFormat {
     * its updates still carry columns computed under the old layout.
     * Any conflicting commit bumps the version, so the loser is
     * GUARANTEED to re-enter this hook before it can publish.
+    *
+    * `removeKeys` (SCD1 only; must carry `keys` and the partition
+    * columns) makes this [[scd1MergeRemoving]]'s pruned form: the
+    * partitions the updates OR the removals touch are merged in one
+    * commit. A removal can empty a partition, so that commit reads
+    * the admitted files whole and removes exactly those files,
+    * instead of naming removed files by the tokens it wrote.
     */
   private[pipeline] def mergePruned(spark: SparkSession, path: String,
                           updates: DataFrame,
@@ -1199,11 +1224,12 @@ object DeltaLogTableFormat extends TableFormat {
                           partitionCols: Seq[String], scdType: Int,
                           compareExclude: Seq[String],
                           onePerTuple: Boolean = false,
-                          preAttempt: () => Unit = () => ()): MergeStats =
+                          preAttempt: () => Unit = () => (),
+                          removeKeys: Option[DataFrame] = None): MergeStats =
     withCommitRetry(s"mergePruned($path)") {
       preAttempt()
       mergePrunedOnce(spark, path, updates, keys, orderBy, partitionCols,
-        scdType, compareExclude, onePerTuple)
+        scdType, compareExclude, onePerTuple, removeKeys)
     }
 
   private def mergePrunedOnce(spark: SparkSession, path: String,
@@ -1211,10 +1237,12 @@ object DeltaLogTableFormat extends TableFormat {
                               keys: Seq[String], orderBy: String,
                               partitionCols: Seq[String], scdType: Int,
                               compareExclude: Seq[String],
-                              onePerTuple: Boolean): MergeStats = {
+                              onePerTuple: Boolean,
+                              removeKeys: Option[DataFrame]): MergeStats = {
     require(partitionCols.nonEmpty, "pruned merge needs a partition column")
     partitionCols.foreach(pc => require(updates.columns.contains(pc),
       s"updates must carry partition column $pc"))
+    require(scdType == 1 || removeKeys.isEmpty, "removals ride SCD1 merges only")
     val ord = MergeTable.deterministicOrd(updates, keys, orderBy)
     val head = currentVersion(path) // pinned: plan and commit agree
     if (head.isEmpty) {
@@ -1230,9 +1258,19 @@ object DeltaLogTableFormat extends TableFormat {
         basedOn = None, onePerTuple = onePerTuple)
       return MergeStats(obs.get("n").asInstanceOf[Long], 0, 0)
     }
-    val affected: Seq[Seq[Any]] = updates
-      .select(partitionCols.map(col): _*).distinct()
-      .collect().map(r => partitionCols.indices.map(r.get)).toSeq
+    // one collect names the tuples of both feeds; `_upd` says whether
+    // any update lands (a removal-only merge that admits no file is a
+    // no-op)
+    val upd = updates.select(partitionCols.map(col): _*)
+    val tupleRows = removeKeys.fold(upd.distinct())(r =>
+      upd.withColumn("_upd", lit(true))
+        .unionByName(r.select(partitionCols.map(col): _*)
+          .withColumn("_upd", lit(false)))
+        .distinct()).collect()
+    val affected: Seq[Seq[Any]] =
+      tupleRows.map(r => partitionCols.indices.map(r.get)).toSeq.distinct
+    val upserting = removeKeys.isEmpty ||
+      tupleRows.exists(_.getBoolean(partitionCols.size))
     // empty updates touch no partitions: commit nothing (the tuple
     // filter below would otherwise .reduce over an empty Seq)
     if (affected.isEmpty) return MergeStats(0, 0, 0)
@@ -1266,6 +1304,7 @@ object DeltaLogTableFormat extends TableFormat {
         partitionCols.zip(t).forall { case (pc, v) =>
           statsAdmit(fe.stats, pc, v, v) }) => f
     }
+    if (!upserting && affectedFiles.isEmpty) return MergeStats(0, 0, 0)
     val schema = prevState.schemaJson
       .map(DataType.fromJson(_).asInstanceOf[StructType])
     val target =
@@ -1278,7 +1317,11 @@ object DeltaLogTableFormat extends TableFormat {
     val affectedCond = affected.map(t =>
       partitionCols.zip(t).map { case (pc, v) => col(pc) === lit(v) }
         .reduce(_ && _)).reduce(_ || _)
-    val affectedTarget = target.filter(affectedCond)
+    // with removals the admitted files are rewritten whole (see
+    // mergePruned), so no tuple filter drops their other rows
+    val affectedTarget =
+      if (removeKeys.isEmpty) target.filter(affectedCond)
+      else MergeTable.withoutKeys(target, removeKeys, keys)
     val tagged =
       if (scdType == 2)
         Cdc.scd2MergeTagged(affectedTarget, updates, keys, ord, orderBy,
@@ -1290,8 +1333,14 @@ object DeltaLogTableFormat extends TableFormat {
           orderGuard = Some(orderBy))
     MergeTable.observedWrite(tagged,
       dropActions = if (scdType == 2) Nil else Seq("delete")) { out =>
-      commitPruned(path, out, partitionCols, basedOn = head,
-        onePerTuple = onePerTuple); ()
+      if (removeKeys.isEmpty)
+        commitPruned(path, out, partitionCols, basedOn = head,
+          onePerTuple = onePerTuple)
+      else
+        commitFiles(path, out, partitionCols,
+          removeOf = (_, _) => affectedFiles, basedOn = head,
+          onePerTuple = onePerTuple)
+      ()
     }
   }
 

@@ -187,6 +187,18 @@ object MergeTable {
       dropActions = Seq("delete"))
   }
 
+  /** `target` without the rows whose keys appear in `removeKeys` —
+    * the removal half of [[TableFormat.scd1MergeRemoving]], applied
+    * before the unchanged merge plan. Null keys never match.
+    */
+  private[pipeline] def withoutKeys(target: DataFrame,
+                                    removeKeys: Option[DataFrame],
+                                    keys: Seq[String]): DataFrame =
+    removeKeys.fold(target)(r =>
+      // a using-join moves the keys first; keep the table's order
+      target.join(r.select(keys.map(col): _*), keys, "left_anti")
+        .select(target.columns.map(col).toIndexedSeq: _*))
+
   /** Widen the target with any columns the updates carry that the
     * table lacks (as nulls on historical rows) — additive schema
     * evolution, the only safe automatic kind. Without this a new
@@ -212,7 +224,8 @@ object MergeTable {
                 keys: Seq[String], orderBy: String,
                 deleteMissing: Boolean = false,
                 compareExclude: Seq[String] = Sources.controlColumns,
-                schemaEvolution: Boolean = true): MergeStats = {
+                schemaEvolution: Boolean = true,
+                removeKeys: Option[DataFrame] = None): MergeStats = {
     val ord = deterministicOrd(updates, keys, orderBy)
     if (!exists(path)) {
       val obs = Observation()
@@ -221,7 +234,8 @@ object MergeTable {
       writeSnapshot(first, path)
       MergeStats(inserted = obs.get("n").asInstanceOf[Long], updated = 0, deleted = 0)
     } else {
-      val target = evolveTarget(read(spark, path), updates, schemaEvolution)
+      val target = evolveTarget(
+        withoutKeys(read(spark, path), removeKeys, keys), updates, schemaEvolution)
       val tagged = Cdc.scd1MergeTagged(target,
         updates.select(target.columns.map(col).toIndexedSeq: _*),
         keys, ord, deleteMissing, compareExclude, orderGuard = Some(orderBy))

@@ -115,13 +115,26 @@ object IngestJob {
     val startedAt = System.currentTimeMillis()
     val runId = java.util.UUID.randomUUID().toString
     def finishRecord(status: String): Unit = cfg.auditTablePath.foreach { p =>
-      Audit.runRecord(spark, cfg.source.path, runId, startedAt,
-        System.currentTimeMillis(), cfg.writes.length, status)
-        .write.mode("append").parquet(s"$p/run_log")
+      Audit.append(Audit.runRecord(spark, cfg.source.path, runId, startedAt,
+        System.currentTimeMillis(), cfg.writes.length, status), s"$p/run_log")
     }
-    try { val out = runInner(spark, cfg); finishRecord("success"); out }
-    catch { case e: Throwable => finishRecord(s"failed: ${e.getClass.getSimpleName}"); throw e }
+    val out = recordingFailure(finishRecord)(runInner(spark, cfg))
+    finishRecord("success")
+    out
   }
+
+  /** Run `body`; if it throws, record the failure with `finish` and
+    * rethrow the ORIGINAL exception — a failing record (unwritable
+    * audit path, full disk) rides along as a suppressed exception
+    * instead of replacing the error that failed the run.
+    */
+  private def recordingFailure[A](finish: String => Unit)(body: => A): A =
+    try body
+    catch { case e: Throwable =>
+      try finish(s"failed: ${e.getClass.getSimpleName}")
+      catch { case f: Throwable => e.addSuppressed(f) }
+      throw e
+    }
 
   /** Evaluate DQ rules, append the result rows to the audit table,
     * then — only when `failHard` and a rule failed — throw. The
@@ -129,6 +142,12 @@ object IngestJob {
     * dq_log table unconditionally): soft-fail leaves the audit
     * trail and continues; hard-fail leaves the SAME trail and then
     * gates. `layer` stamps which medallion step evaluated the rules.
+    *
+    * The same aggregate pass counts nulls in each of `mergeKeys` (the
+    * key sets of the merge targets about to be written), so a null
+    * key fails the run with an IllegalArgumentException after the
+    * DQ trail and gate but before ANY target is written, and costs no
+    * scan of its own.
     *
     * Migration note: the `layer` column was added in round 6 — an
     * audit dir with older dq_results part files needs
@@ -139,24 +158,34 @@ object IngestJob {
                                 rules: Seq[graft.dq.DqRule],
                                 auditTablePath: Option[String],
                                 failHard: Boolean,
-                                layer: String): Unit = {
-    if (rules.nonEmpty) {
-      import org.apache.spark.sql.functions.{col, lit, not}
-      // Rules are always materialized (collect is over one row per
-      // rule — tiny); violations gate the write when configured,
-      // matching the reference DQ layer's fail-the-pipeline surface.
-      val dq = graft.dq.DataQuality.evaluate(df, rules)
-        .withColumn("layer", lit(layer)).cache()
-      val failed = dq.filter(not(col("passed")))
-        .select("rule_name").collect().map(_.getString(0)).toSeq
-      auditTablePath.foreach { p =>
-        dq.write.mode("append").parquet(s"$p/dq_results")
+                                layer: String,
+                                mergeKeys: Seq[Seq[String]] = Nil): Unit = {
+    val keyRules = mergeKeys.filter(_.nonEmpty).distinct.map(graft.dq.NullKeys)
+    if (rules.nonEmpty || keyRules.nonEmpty) {
+      import org.apache.spark.sql.functions.lit
+      // one row per rule, in rule order: collecting them IS the pass;
+      // violations gate the write when configured, matching the
+      // reference DQ layer's fail-the-pipeline surface
+      val dq = graft.dq.DataQuality.evaluate(df, rules ++ keyRules)
+        .withColumn("layer", lit(layer))
+      val (ruleRows, keyRows) = dq.collect().toSeq.splitAt(rules.size)
+      if (rules.nonEmpty) auditTablePath.foreach { p =>
+        Audit.append(df.sparkSession, ruleRows, dq.schema, s"$p/dq_results")
       }
-      dq.unpersist()
+      val failed = ruleRows.filterNot(_.getAs[Boolean]("passed"))
+        .map(_.getAs[String]("rule_name"))
       if (failHard && failed.nonEmpty)
         throw new DqViolationException(failed)
+      keyRules.zip(keyRows).collectFirst {
+        case (k, r) if !r.getAs[Boolean]("passed") => k.keys
+      }.foreach(ks => throw new IllegalArgumentException(
+        s"null merge keys present (${ks.mkString(",")})"))
     }
   }
+
+  /** Key sets whose nulls the DQ pass must count before `writes`. */
+  private def mergeKeysOf(cfg: IngestConfig, writes: Seq[WriteConfig]): Seq[Seq[String]] =
+    if (cfg.validateKeys) writes.filter(_.mode == "merge").map(_.keys) else Nil
 
   private def runInner(spark: SparkSession, cfg: IngestConfig): DataFrame = {
     val df = transform(read(spark, cfg), cfg)
@@ -165,21 +194,20 @@ object IngestJob {
     // "" for plain jobs, "bronze" for a medallion bronze config
     applyDq(df, cfg.dqRules, cfg.auditTablePath, cfg.failOnDqViolation,
       layer = cfg.writes.map(_.medallionLayer).filter(_.nonEmpty)
-        .distinct.mkString(","))
+        .distinct.mkString(","), mergeKeysOf(cfg, cfg.writes))
     writeTargets(spark, cfg, df, cfg.writes)
     df
   }
 
-  /** One write loop for every layer: key validation, format-routed
-    * merge, and audit_log rows apply identically whether the frame
-    * is a bronze ingest or a medallion silver product.
+  /** One write loop for every layer: format-routed merge and
+    * audit_log rows apply identically whether the frame is a bronze
+    * ingest or a medallion silver product (the DQ pass before it has
+    * already validated every merge target's keys).
     */
   private def writeTargets(spark: SparkSession, cfg: IngestConfig,
                            df: DataFrame, writes: Seq[WriteConfig]): Unit =
     writes.foreach { wc =>
       val deleteMissing = wc.extractMode == "fe"
-      if (wc.mode == "merge" && cfg.validateKeys)
-        graft.cdc.Cdc.requireNonNullKeys(df, wc.keys)
       val stats = wc.mode match {
         case "merge" if wc.partitionBy.nonEmpty =>
           // ConfigHandler already rejected fe + partitionBy and
@@ -216,7 +244,7 @@ object IngestJob {
           MergeStats(inserted = -1, updated = -1, deleted = -1)
       }
       cfg.auditTablePath.foreach { p =>
-        Audit.log(spark, wc.path, wc.mode, stats).write.mode("append").parquet(s"$p/audit_log")
+        Audit.append(Audit.log(spark, wc.path, wc.mode, stats), s"$p/audit_log")
       }
       if (wc.mode == "merge" && (wc.optimizeAfter || wc.clusterBy.nonEmpty ||
           wc.zorderBy.nonEmpty)) {
@@ -234,10 +262,9 @@ object IngestJob {
           // (writer.py:690 audit_log(operation="optimize")):
           // inserted = files written, deleted = files compacted away
           cfg.auditTablePath.foreach { p =>
-            Audit.log(spark, wc.path, "optimize",
+            Audit.append(Audit.log(spark, wc.path, "optimize",
               MergeStats(inserted = os.written, updated = 0,
-                deleted = os.compacted))
-              .write.mode("append").parquet(s"$p/audit_log")
+                deleted = os.compacted)), s"$p/audit_log")
           }
         }
       }
@@ -297,20 +324,19 @@ object IngestJob {
     val startedAt = System.currentTimeMillis()
     val runId = java.util.UUID.randomUUID().toString
     def finishRecord(status: String): Unit = bronze.auditTablePath.foreach { p =>
-      Audit.runRecord(spark, s"silver:${bronze.writes.head.path}", runId,
-        startedAt, System.currentTimeMillis(), silverWrites.length, status)
-        .write.mode("append").parquet(s"$p/run_log")
+      Audit.append(Audit.runRecord(spark, s"silver:${bronze.writes.head.path}",
+        runId, startedAt, System.currentTimeMillis(), silverWrites.length,
+        status), s"$p/run_log")
     }
-    try {
+    recordingFailure(finishRecord) {
+      // same DQ pass and write loop as the bronze ingest: silver
+      // merges get the identical key validation and audit_log rows
       applyDq(silverDf, silverDqRules, bronze.auditTablePath,
-        bronze.failOnDqViolation, layer = "silver")
-      // same write loop as the bronze ingest: silver merges get the
-      // identical key validation and audit_log rows
+        bronze.failOnDqViolation, layer = "silver",
+        mergeKeysOf(bronze, silverWrites))
       writeTargets(spark, bronze, silverDf, silverWrites)
-      finishRecord("success")
-    } catch { case e: Throwable =>
-      finishRecord(s"failed: ${e.getClass.getSimpleName}"); throw e
     }
+    finishRecord("success")
     (bronzeDf, silverDf)
   }
 }

@@ -72,6 +72,27 @@ trait TableFormat {
   def deleteKeys(spark: SparkSession, path: String, delKeys: DataFrame,
                  keys: Seq[String]): MergeStats
 
+  /** SCD1 upsert that also removes the rows whose `keys` appear in
+    * `removeKeys`, as ONE commit: the target is filtered by the
+    * removals, then merged with `updates` through the same
+    * `Cdc.scd1MergeTagged` plan as [[scd1Merge]]. A key in both sets
+    * is removed, then upserted. Removing an absent key is a no-op;
+    * null-keyed removals never match. Creates the table on first
+    * write (the removals then have nothing to remove). `deleted`
+    * does not count removed rows: metering them would take a second
+    * pass over the target. The default commits twice ([[deleteKeys]],
+    * then [[scd1Merge]]); the bundled formats override it.
+    */
+  def scd1MergeRemoving(spark: SparkSession, path: String, updates: DataFrame,
+                        removeKeys: DataFrame, keys: Seq[String],
+                        orderBy: String,
+                        compareExclude: Seq[String] = Sources.controlColumns,
+                        schemaEvolution: Boolean = true): MergeStats = {
+    if (exists(path)) deleteKeys(spark, path, removeKeys, keys)
+    scd1Merge(spark, path, updates, keys, orderBy, deleteMissing = false,
+      compareExclude, schemaEvolution)
+  }
+
   /** Drop versions beyond the retention window. Returns dropped
     * version ids.
     */
@@ -190,6 +211,15 @@ object SnapshotTableFormat extends TableFormat {
                          schemaEvolution: Boolean): MergeStats =
     MergeTable.scd1Merge(spark, path, updates, keys, orderBy, deleteMissing,
       compareExclude, schemaEvolution)
+
+  override def scd1MergeRemoving(spark: SparkSession, path: String,
+                                 updates: DataFrame, removeKeys: DataFrame,
+                                 keys: Seq[String], orderBy: String,
+                                 compareExclude: Seq[String],
+                                 schemaEvolution: Boolean): MergeStats =
+    MergeTable.scd1Merge(spark, path, updates, keys, orderBy,
+      deleteMissing = false, compareExclude, schemaEvolution,
+      removeKeys = Some(removeKeys))
 
   override def scd2Merge(spark: SparkSession, path: String, updates: DataFrame,
                          keys: Seq[String], orderBy: String,

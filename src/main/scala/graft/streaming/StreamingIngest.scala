@@ -199,14 +199,13 @@ object StreamingIngest {
           val violations =
             if (dqRules.isEmpty) Nil
             else {
+              // one row per rule: collecting them IS the DQ pass
               val dq = graft.dq.DataQuality.evaluate(batch, dqRules)
-                .withColumn("batch_id", lit(batchId)).cache()
-              dqResultsPath.foreach(p =>
-                dq.write.mode("append").parquet(p))
-              val bad = dq.filter(!col("passed"))
-                .select("rule_name").collect().map(_.getString(0)).toSeq
-              dq.unpersist()
-              bad
+                .withColumn("batch_id", lit(batchId))
+              val rows = dqResultsPath.fold(dq.collect())(
+                graft.pipeline.Audit.append(dq, _))
+              rows.filterNot(_.getAs[Boolean]("passed"))
+                .map(_.getAs[String]("rule_name")).toSeq
             }
           if (violations.isEmpty) {
             val spark = batch.sparkSession

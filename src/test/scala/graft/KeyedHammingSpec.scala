@@ -66,6 +66,32 @@ class KeyedHammingSpec extends SparkSpec {
     }
   }
 
+  test("a NULL key never pairs: its rows report empty stats, the keyed rows are unchanged") {
+    val sparkS = spark
+    import sparkS.implicits._
+    val h = 0x1234567890abcdefL
+    val keyed = Seq((0L, Some("image"), h), (1L, Some("image"), h),
+        (2L, Some("image"), h ^ 0x3L))
+      .toDF("id", "media_type", "simhash")
+    // identical hashes and a near hash under the NULL key, next to the
+    // same hashes under a real key
+    val withNulls = keyed.unionByName(
+      Seq((10L, Option.empty[String], h), (11L, Option.empty[String], h),
+          (12L, Option.empty[String], h ^ 0x3L))
+        .toDF("id", "media_type", "simhash"))
+    def run(df: org.apache.spark.sql.DataFrame) =
+      Dedup.hammingNearDupFromHashesKeyed(df, "id", "media_type",
+        maxHamming = 8, maxBucket = 10000)
+    val out = run(withNulls)
+    val nulls = out.filter(col("media_type").isNull)
+      .select("id", "n_candidates", "n_near", "min_hamming")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        Option(r.get(3)))).sortBy(_._1).toSeq
+    assert(nulls == Seq(10L, 11L, 12L).map(i => (i, 0L, 0L, None)),
+      nulls.mkString("; "))
+    assert(canon(out.filter(col("media_type").isNotNull)) == canon(run(keyed)))
+  }
+
   test("keyed pass on the sf fixture matches the per-type union end to end") {
     import SparkSpec.spark.implicits._
     val hashes = graft.multimodal.Multimodal.perceptualHashes(

@@ -1,15 +1,12 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.graftbridge.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.datasources.parquet.ParquetSchemaBridge
 import org.apache.spark.sql.functions._
@@ -44,18 +41,6 @@ class ParquetReadSpec extends SparkSpec {
   private def firstPart(dir: String): java.nio.file.Path =
     scala.util.Using.resource(Files.list(Paths.get(dir)))(_.iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.minBy(_.toString))
-
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    ListenerBridge.drain(sc)
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
-    }
-    sc.addSparkListener(l)
-    try { body; ListenerBridge.drain(sc); n.get }
-    finally sc.removeSparkListener(l)
-  }
 
   test("every board table resolves to the inferred schema") {
     for (t <- Tables.names) {
