@@ -1355,8 +1355,8 @@ object Dedup {
           coalesce(col("_sig_now"), lit(0L)).as("_bucket_sig"))
       // materialized once: the emptiness probe and the gold commit
       // read the same rows instead of each evaluating the plan
-      val stats = graft.Materialize.eager(statsRows)
-      if (!stats.isEmpty || (drops.nonEmpty && fmt.exists(goldPath)))
+      val stats = Some(graft.Materialize.eager(statsRows)).filterNot(_.isEmpty)
+      if (stats.nonEmpty || fmt.exists(goldPath))
         mergeRemoving(spark, fmt, goldPath, stats, drops, Seq("id"))
     }
 
@@ -1377,8 +1377,8 @@ object Dedup {
       val batchH = graft.Materialize.eager(
         shingleHashes(batchDocs, "id", "text", n)
           .withColumn("chash", xxhash64(col("shash"))))
-      mergeMinhashGroupState(spark, batchH, docsPath, groupsPath, bandsPath,
-        batchOrd, numPerm, bands, fmt)
+      mergeMinhashGroupState(spark, Some(batchH), docsPath, groupsPath,
+        bandsPath, batchOrd, numPerm, bands, fmt)
       val members = fmt.read(spark, docsPath).select(col("id"), col("chash"))
       val groupsT = fmt.read(spark, groupsPath)
         .select(col("chash"), col("shash"))
@@ -1450,20 +1450,14 @@ object Dedup {
         t.join(fmt.read(spark, docsPath).select(col("chash")),
           Seq("chash"), "left_anti"))).filterNot(_.isEmpty)
     // each state table commits once: docs (retraction + membership),
-    // then bands and groups (new groups + orphan sweep)
-    if (!liveDocs.isEmpty) {
-      val batchH = graft.Materialize.eager(
-        shingleHashes(liveDocs, "id", "text", n)
-          .withColumn("chash", xxhash64(col("shash"))))
+    // then bands and groups (new groups + orphan sweep); a batch with
+    // no live doc only retracts and sweeps
+    val batchH = Some(liveDocs).filterNot(_.isEmpty).map(l =>
+      graft.Materialize.eager(shingleHashes(l, "id", "text", n)
+        .withColumn("chash", xxhash64(col("shash")))))
+    if (batchH.nonEmpty || touchedOld.nonEmpty)
       mergeMinhashGroupState(spark, batchH, docsPath, groupsPath, bandsPath,
         batchOrd, numPerm, bands, fmt, touchedOld.map(_ => retIds), orphans)
-    } else if (touchedOld.nonEmpty) {
-      fmt.deleteKeys(spark, docsPath, retIds, Seq("id"))
-      orphans().foreach { o =>
-        fmt.deleteKeys(spark, groupsPath, o, Seq("chash"))
-        fmt.deleteKeys(spark, bandsPath, o, Seq("chash"))
-      }
-    }
     if (!fmt.exists(docsPath)) return // empty first batch
 
     val members = graft.Materialize.eager(
@@ -1510,58 +1504,63 @@ object Dedup {
       affectedGroups, sigNowDoc, drops)
   }
 
-  /** One commit: SCD1-upsert `rows` into `path` (ordered by `_ord`),
-    * removing the keys in `remove` when given.
+  /** At most one commit: SCD1-upsert `rows` into `path` (ordered by
+    * `_ord`), removing the keys in `remove`; with no rows, only the
+    * removal; with neither, nothing.
     */
   private def mergeRemoving(spark: SparkSession,
                             fmt: graft.pipeline.TableFormat, path: String,
-                            rows: DataFrame, remove: Option[DataFrame],
+                            rows: Option[DataFrame], remove: Option[DataFrame],
                             keys: Seq[String]): Unit =
-    remove match {
-      case Some(r) =>
-        fmt.scd1MergeRemoving(spark, path, rows, r, keys, "_ord",
+    (rows, remove) match {
+      case (Some(u), Some(r)) =>
+        fmt.scd1MergeRemoving(spark, path, u, r, keys, "_ord",
           compareExclude = Nil)
-      case None =>
-        fmt.scd1Merge(spark, path, rows, keys, "_ord", compareExclude = Nil)
+      case (Some(u), None) =>
+        fmt.scd1Merge(spark, path, u, keys, "_ord", compareExclude = Nil)
+      case (None, Some(r)) => fmt.deleteKeys(spark, path, r, keys)
+      case (None, None) => ()
     }
 
   /** Merge one batch's group-keyed MinHash state (batchH = (id,
-    * shash, chash)): membership keyed on id, representative arrays
-    * keyed on chash, band rows keyed (band, bhash, chash), one commit
-    * per table. `retract` names ids whose old membership rows the docs
-    * commit removes; `orphans`, asked after that commit, names the
-    * groups it left memberless, which the bands and groups commits
-    * remove. Group and band rows for an EXISTING chash merge
-    * idempotently (identical content by construction), so replays
-    * converge.
+    * shash, chash), None when the batch has no live doc): membership
+    * keyed on id, representative arrays keyed on chash, band rows
+    * keyed (band, bhash, chash), at most one commit per table.
+    * `retract` names ids whose old membership rows the docs commit
+    * removes; `orphans`, asked after that commit, names the groups it
+    * left memberless, which the bands and groups commits remove.
+    * Group and band rows for an EXISTING chash merge idempotently
+    * (identical content by construction), so replays converge.
     */
-  private def mergeMinhashGroupState(spark: SparkSession, batchH: DataFrame,
+  private def mergeMinhashGroupState(spark: SparkSession,
+      batchH: Option[DataFrame],
       docsPath: String, groupsPath: String, bandsPath: String,
       batchOrd: Long, numPerm: Int, bands: Int,
       fmt: graft.pipeline.TableFormat,
       retract: Option[DataFrame] = None,
       orphans: () => Option[DataFrame] = () => None): Unit = {
     mergeRemoving(spark, fmt, docsPath,
-      batchH.select(col("id"), col("chash")).withColumn("_ord", lit(batchOrd)),
+      batchH.map(_.select(col("id"), col("chash"))
+        .withColumn("_ord", lit(batchOrd))),
       retract, Seq("id"))
     val gone = orphans()
     // one representative array per batch group (`first` exact: all
     // members' arrays are identical by construction)
-    val batchGroups = graft.Materialize.eager(
-      batchH.groupBy(col("chash")).agg(first(col("shash")).as("shash")))
+    val batchGroups = batchH.map(h => graft.Materialize.eager(
+      h.groupBy(col("chash")).agg(first(col("shash")).as("shash"))))
     def bandRows(groups: DataFrame): DataFrame =
       bandRowsFromHashes(groups.select(col("chash").as("id"), col("shash")),
           numPerm, bands)
         .select(col("id").as("chash"), col("band"), col("bhash"))
-    // an orphan's band rows are its array's bands, named from the
-    // groups table before the groups commit removes it
+    // an orphan's band rows are its array's bands, named with the full
+    // key from the groups table before the groups commit removes it
     mergeRemoving(spark, fmt, bandsPath,
-      bandRows(batchGroups).withColumn("_ord", lit(batchOrd)),
+      batchGroups.map(g => bandRows(g).withColumn("_ord", lit(batchOrd))),
       gone.map(o => bandRows(
         fmt.read(spark, groupsPath).join(o, Seq("chash"), "left_semi"))),
       Seq("band", "bhash", "chash"))
     mergeRemoving(spark, fmt, groupsPath,
-      batchGroups.withColumn("_ord", lit(batchOrd)), gone, Seq("chash"))
+      batchGroups.map(_.withColumn("_ord", lit(batchOrd))), gone, Seq("chash"))
   }
 
   /** Fail fast when a state dir written by the pre-r15 DOC-level
@@ -1981,8 +1980,8 @@ object Dedup {
     val batchH = graft.Materialize.eager(
       shingleHashes(batchDocs, "id", "text", n)
         .withColumn("chash", xxhash64(col("shash"))))
-    mergeMinhashGroupState(spark, batchH, docsPath, groupsPath, bandsPath,
-      batchOrd, numPerm, bands, fmt)
+    mergeMinhashGroupState(spark, Some(batchH), docsPath, groupsPath,
+      bandsPath, batchOrd, numPerm, bands, fmt)
     // self-labels for the batch BEFORE edge projection, ord-guarded:
     // a replayed old batch cannot regress a label a later batch set
     fmt.scd1Merge(spark, goldPath,

@@ -80,18 +80,13 @@ trait TableFormat {
     * null-keyed removals never match. Creates the table on first
     * write (the removals then have nothing to remove). `deleted`
     * does not count removed rows: metering them would take a second
-    * pass over the target. The default commits twice ([[deleteKeys]],
-    * then [[scd1Merge]]); the bundled formats override it.
+    * pass over the target.
     */
   def scd1MergeRemoving(spark: SparkSession, path: String, updates: DataFrame,
                         removeKeys: DataFrame, keys: Seq[String],
                         orderBy: String,
                         compareExclude: Seq[String] = Sources.controlColumns,
-                        schemaEvolution: Boolean = true): MergeStats = {
-    if (exists(path)) deleteKeys(spark, path, removeKeys, keys)
-    scd1Merge(spark, path, updates, keys, orderBy, deleteMissing = false,
-      compareExclude, schemaEvolution)
-  }
+                        schemaEvolution: Boolean = true): MergeStats
 
   /** Drop versions beyond the retention window. Returns dropped
     * version ids.

@@ -53,6 +53,15 @@ private[graft] class CountingFormat(inner: graft.pipeline.TableFormat)
                          schemaEvolution: Boolean) =
     inner.scd2Merge(spark, path, updates, keys, orderBy, deleteMissing,
       compareExclude, schemaEvolution)
+  override def scd1MergeRemoving(spark: org.apache.spark.sql.SparkSession,
+                                 path: String,
+                                 updates: org.apache.spark.sql.DataFrame,
+                                 removeKeys: org.apache.spark.sql.DataFrame,
+                                 keys: Seq[String], orderBy: String,
+                                 compareExclude: Seq[String],
+                                 schemaEvolution: Boolean) =
+    inner.scd1MergeRemoving(spark, path, updates, removeKeys, keys, orderBy,
+      compareExclude, schemaEvolution)
   override def deleteKeys(spark: org.apache.spark.sql.SparkSession,
                           path: String,
                           delKeys: org.apache.spark.sql.DataFrame,

@@ -65,33 +65,31 @@ class WritePathSpec extends SparkSpec {
     assert(got == (ids.filterNot(emptied.contains) :+ upsert).sorted)
   }
 
-  for ((label, fmt) <- formats)
-    test(s"minhash fold: an update batch commits docs, groups, bands and gold once each ($label)") {
-      val stateDir = tmp("graft_fold_state")
-      val gold = tmp("graft_fold_gold") + "/t"
-      val P = (3, 16, 4, 0.5) // n, numPerm, bands, threshold
-      var corpus = Map.empty[Long, String]
-      def fold(ord: Long, rows: Seq[(Long, String)],
-               deletes: Seq[Long] = Nil): Unit = {
-        corpus = corpus ++ rows.toMap -- deletes
-        Dedup.minhashLshStatsIncremental(spark, rows.toDF("doc_id", "text"),
-          "doc_id", "text", stateDir, gold, batchOrd = ord, n = P._1,
-          numPerm = P._2, bands = P._3, threshold = P._4,
-          deletes = if (deletes.isEmpty) None else Some(deletes.toDF("doc_id")),
-          fmt = fmt)
-      }
-      val dup = "alpha beta gamma delta epsilon zeta eta theta"
-      fold(0L, (1L, dup) +: (2L, dup + " iota") +:
-        (3L to 12L).map(i => (i, s"filler words number $i distinct piece")))
-      val tables = Seq("docs", "groups", "bands").map(t => s"$stateDir/$t") :+ gold
-      val before = tables.map(t => fmt.currentVersion(t).get)
-      // updates re-key docs 3 and 4 (their old groups lose their last
-      // member: the orphan sweep), doc 5 is hard-deleted, 13 is new
-      fold(1L, Seq((3L, dup), (4L, "brand new content for four"),
-        (13L, dup + " kappa")), deletes = Seq(5L))
-      val after = tables.map(t => fmt.currentVersion(t).get)
-      assert(after.zip(before).map { case (a, b) => a - b } == Seq(1, 1, 1, 1),
-        s"versions advanced by ${after.zip(before).map { case (a, b) => a - b }}")
+  /** A minhash fold over fresh state and gold, tracking the corpus it
+    * should equal.
+    */
+  private class FoldRun(fmt: TableFormat) {
+    val stateDir = tmp("graft_fold_state")
+    val gold = tmp("graft_fold_gold") + "/t"
+    private val P = (3, 16, 4, 0.5) // n, numPerm, bands, threshold
+    private var corpus = Map.empty[Long, String]
+    val tables = Seq("docs", "groups", "bands").map(t => s"$stateDir/$t") :+ gold
+    def versions: Seq[Int] = tables.map(t => fmt.currentVersion(t).get)
+
+    def fold(ord: Long, rows: Seq[(Long, String)],
+             deletes: Seq[Long] = Nil): Unit = {
+      corpus = corpus ++ rows.toMap -- deletes -- rows.filter(_._2 == null).map(_._1)
+      Dedup.minhashLshStatsIncremental(spark, rows.toDF("doc_id", "text"),
+        "doc_id", "text", stateDir, gold, batchOrd = ord, n = P._1,
+        numPerm = P._2, bands = P._3, threshold = P._4,
+        deletes = if (deletes.isEmpty) None else Some(deletes.toDF("doc_id")),
+        fmt = fmt)
+    }
+
+    /** Gold equals the batch operator over the corpus, and no group
+      * without a member is left in `groups` or `bands`.
+      */
+    def check(): Unit = {
       val truth = Dedup.minhashLshStats(corpus.toSeq.toDF("doc_id", "text"),
           "doc_id", "text", n = P._1, numPerm = P._2, bands = P._3,
           threshold = P._4)
@@ -100,12 +98,49 @@ class WritePathSpec extends SparkSpec {
       val got = fmt.read(spark, gold).select("id", "n_candidates", "n_near")
         .as[(Long, Long, Long)].collect().sorted.toSeq
       assert(got == truth, s"gold ${got.mkString("; ")} vs batch ${truth.mkString("; ")}")
-      // the sweep left no memberless group behind
       val live = fmt.read(spark, s"$stateDir/docs").select("chash").distinct()
       assert(fmt.read(spark, s"$stateDir/groups").select("chash")
         .except(live).count() == 0)
       assert(fmt.read(spark, s"$stateDir/bands").select("chash").distinct()
         .except(live).count() == 0)
+    }
+
+    def advancedSince(before: Seq[Int]): Seq[Int] =
+      versions.zip(before).map { case (a, b) => a - b }
+  }
+
+  private val dup = "alpha beta gamma delta epsilon zeta eta theta"
+  private val firstBatch: Seq[(Long, String)] = (1L, dup) +: (2L, dup + " iota") +:
+    (3L to 12L).map(i => (i, s"filler words number $i distinct piece"))
+
+  for ((label, fmt) <- formats)
+    test(s"minhash fold: an update batch commits docs, groups, bands and gold once each ($label)") {
+      val run = new FoldRun(fmt)
+      run.fold(0L, firstBatch)
+      val before = run.versions
+      // updates re-key docs 3 and 4 (their old groups lose their last
+      // member: the orphan sweep), doc 5 is hard-deleted, 13 is new
+      run.fold(1L, Seq((3L, dup), (4L, "brand new content for four"),
+        (13L, dup + " kappa")), deletes = Seq(5L))
+      val moved = run.advancedSince(before)
+      assert(moved == Seq(1, 1, 1, 1), s"versions advanced by $moved")
+      run.check()
+    }
+
+  for ((label, fmt) <- formats)
+    test(s"minhash fold: a batch with no live doc sweeps a lone doc's group ($label)") {
+      val run = new FoldRun(fmt)
+      run.fold(0L, firstBatch)
+      // deletes only: doc 7 is alone in its group, which must leave
+      // groups and bands
+      val before = run.versions
+      run.fold(1L, Seq.empty, deletes = Seq(7L))
+      val moved = run.advancedSince(before)
+      assert(moved == Seq(1, 1, 1, 1), s"versions advanced by $moved")
+      run.check()
+      // an update to null text retracts like a delete: doc 8 is alone too
+      run.fold(2L, Seq((8L, null: String)))
+      run.check()
     }
 
   /** `pq.read_table` of a parquet directory: schema with field
